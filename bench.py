@@ -497,6 +497,9 @@ def main() -> int:
         # re-run with fresh state roots (substitution is in-band)
         "stream_phase_attempts": stream_attempts,
         "sf": _sf_from_dir(SF_DIR),
+        # compare rounds only at equal effective parallelism and inputs
+        "cpus_effective": spark.sparkContext.defaultParallelism,
+        "sf_dir": os.path.realpath(SF_DIR),
         # cross-round caveat: r4/r5 hosts run this same best-of-2
         # harness ~1.4x slower than r3's on queries whose code and
         # inputs did not change (uniform inflation, idle system,
@@ -540,6 +543,8 @@ def main() -> int:
         "stream_cal_note": cal_note,
         "stream_phase_attempts": stream_attempts,
         "sf": full["sf"],
+        "cpus_effective": full["cpus_effective"],
+        "sf_dir": full["sf_dir"],
         "full_artifact": "BENCH_LAST.json",
     }
     print(json.dumps(compact))

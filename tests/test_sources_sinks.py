@@ -2,7 +2,8 @@
 
 A threaded stdlib HTTP server plays the challenge API: authenticated CSV
 downloads, paginated JSON transactions (envelope AND bare-array pages, one
-flaky page that fails once to exercise bounded retry). Derby embedded plays
+flaky page that fails once to exercise bounded retry); it logs every page
+request so tests can count probes past the end. Derby embedded plays
 the JDBC target so the sink + DDL path runs against a real database.
 """
 
@@ -10,6 +11,7 @@ from __future__ import annotations
 
 import json
 import threading
+import time
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
@@ -21,8 +23,10 @@ from zylyty_data_engineer_challenge_spark.schemas import ACCOUNTS, CLIENTS
 from zylyty_data_engineer_challenge_spark.sinks import jdbc as jdbc_sink
 from zylyty_data_engineer_challenge_spark.sources.http_csv import fetch_csv
 from zylyty_data_engineer_challenge_spark.sources.rest_pages import (
+    RETRY_SLEEP,
+    _parse_ts,
     read_transactions,
-    read_transactions_fallback,
+    register,
 )
 
 TOKEN = "test-token"
@@ -36,6 +40,16 @@ CLIENTS_CSV = (
     "c1,Alice,alice@x.com,1990-01-01\n"
     "c2,Bob,bob@x.com,1985-05-05\n"
 )
+CSV_BODIES = {
+    "accounts": ACCOUNTS_CSV,
+    "clients": CLIENTS_CSV,
+    "header_only": "client_id,client_name,client_email,client_birth_date\n",
+    "bad_cells": "account_id,client_id\nx,c1\n2,c2\n",
+    "bad_date": (
+        "client_id,client_name,client_email,client_birth_date\n"
+        "c1,Alice,alice@x.com,not-a-date\n"
+    ),
+}
 
 
 def _tx(i: int) -> dict:
@@ -51,6 +65,7 @@ def _tx(i: int) -> dict:
 
 class _ApiHandler(BaseHTTPRequestHandler):
     flaky_failures = {"1": 1}  # page 1 fails once, then succeeds
+    page_log: list[tuple[str, int, int]] = []  # (token, page, limit) per request
 
     def log_message(self, *a):  # silence
         pass
@@ -63,20 +78,22 @@ class _ApiHandler(BaseHTTPRequestHandler):
         self.wfile.write(body)
 
     def do_GET(self):  # noqa: N802
+        url = urlparse(self.path)
+        q = parse_qs(url.query)
+        page = q.get("page", ["0"])[0]
+        limit = int(q.get("limit", ["100"])[0])
+        if url.path == "/transactions":
+            token = self.headers.get("Authorization", "").removeprefix("Bearer ")
+            self.page_log.append((token, int(page), limit))
         if self.headers.get("Authorization") != f"Bearer {TOKEN}":
             self._send(401, b'{"error": "unauthorized"}')
             return
-        url = urlparse(self.path)
-        if url.path == "/download/accounts.csv":
-            self._send(200, ACCOUNTS_CSV.encode(), "text/csv")
-        elif url.path == "/download/clients.csv":
-            self._send(200, CLIENTS_CSV.encode(), "text/csv")
+        name = url.path.removeprefix("/download/").removesuffix(".csv")
+        if name in CSV_BODIES:
+            self._send(200, CSV_BODIES[name].encode(), "text/csv")
         elif url.path == "/download/broken.csv":
             self._send(500, b"boom", "text/plain")
         elif url.path == "/transactions":
-            q = parse_qs(url.query)
-            page = q.get("page", ["0"])[0]
-            limit = int(q.get("limit", ["100"])[0])
             if self.flaky_failures.get(page, 0) > 0:
                 self.flaky_failures[page] -= 1
                 self._send(503, b'{"error": "try again"}')
@@ -134,32 +151,172 @@ def test_fetch_csv_bad_token_yields_empty(spark, api_server):
     assert df.count() == 0
 
 
+def test_fetch_csv_header_only_yields_typed_empty(spark, api_server):
+    df = fetch_csv(spark, api_server, "header_only", TOKEN, CLIENTS)
+    assert df.count() == 0
+    assert [(f.name, f.dataType) for f in df.schema] == [
+        (f.name, f.dataType) for f in CLIENTS
+    ]
+
+
+def test_fetch_csv_bad_cells_become_null(spark, api_server):
+    accounts = fetch_csv(spark, api_server, "bad_cells", TOKEN, ACCOUNTS)
+    assert {(r.account_id, r.client_id) for r in accounts.collect()} == {
+        (None, "c1"), (2, "c2")
+    }
+    clients = fetch_csv(spark, api_server, "bad_date", TOKEN, CLIENTS)
+    [row] = clients.collect()
+    assert (row.client_id, row.client_birth_date) == ("c1", None)
+
+
 # ---------------------------------------------------------------------------
-# S3/S4 — both the partitioned data source and the fallback loop
+# S3/S4 — the partitioned data source
 # ---------------------------------------------------------------------------
 
 
-@pytest.mark.parametrize("reader", [read_transactions, read_transactions_fallback])
-def test_rest_pages_reads_all(spark, api_server, reader):
-    df = reader(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+def _read_ranges(spark, base_url: str, token: str, limit: int, max_pages: int,
+                 partitions: int):
+    """The data source with a fixed range count, independent of the slots."""
+    register(spark)
+    return (
+        spark.read.format("rest_pages")
+        .option("base_url", base_url)
+        .option("token", token)
+        .option("limit", limit)
+        .option("max_pages", max_pages)
+        .option("partitions", partitions)
+        .load()
+    )
+
+
+def test_rest_pages_reads_all(spark, api_server):
+    df = read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
     rows = df.collect()
     assert len(rows) == N_TX
     by_id = {r.transaction_id: r for r in rows}
     # envelope page (0) and bare-array page (1) both parsed
     assert by_id[5].amount == "5.25"
     assert by_id[107].amount == "garbage"  # raw string survives to cleaning
-    assert by_id[150].account_id == 151 % 3 + 1 - 1 or by_id[150] is not None
+    assert by_id[150].account_id == 150 % 3 + 1
     # arrival ordinal is page*limit + idx == transaction id here
     assert all(r._arrival == r.transaction_id for r in rows)
     assert by_id[23].timestamp.month == 3
 
 
 def test_rest_pages_partitioned_parallelism(spark, api_server):
-    df = read_transactions(
-        spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10, pages_per_partition=2
+    slots = spark.sparkContext.defaultParallelism
+    # default arguments: 301 pages, one contiguous range per task slot
+    assert read_transactions(spark, api_server, TOKEN).rdd.getNumPartitions() == min(
+        301, slots
     )
-    assert df.rdd.getNumPartitions() > 1
-    assert df.count() == N_TX
+    # fewer pages than slots: one page per range
+    df = read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=1)
+    assert df.rdd.getNumPartitions() == min(2, slots)
+    assert df.count() == 2 * PAGE_LIMIT
+
+
+def test_rest_pages_feed_ends_mid_range(spark, api_server):
+    # limit 60: pages 0-2 are full, page 3 (30 rows) ends the feed; 11 pages
+    # in 4 ranges are [0,2) [2,5) [5,8) [8,11), so the end is mid-range
+    limit, ranges = 60, 4
+    _ApiHandler.page_log.clear()
+    rows = _read_ranges(spark, api_server, TOKEN, limit, 10, ranges).collect()
+    assert len(rows) == N_TX
+    assert sorted(r.transaction_id for r in rows) == list(range(N_TX))
+    # _tx(i) sits at index i % limit of page i // limit
+    assert all(r._arrival == (r.transaction_id // limit) * limit + r.transaction_id % limit
+               for r in rows)
+    requested = [p for tok, p, lim in _ApiHandler.page_log if tok == TOKEN and lim == limit]
+    past_end = {p for p in requested if p * limit >= N_TX}
+    assert past_end and len(past_end) <= ranges - 1
+    assert 4 not in requested  # the short page stopped its own range
+
+
+class _FixedFeedHandler(BaseHTTPRequestHandler):
+    """One short page of hand-picked records, then an empty feed."""
+
+    records: list[dict] = []
+
+    def log_message(self, *a):
+        pass
+
+    def do_GET(self):  # noqa: N802
+        page = int(parse_qs(urlparse(self.path).query)["page"][0])
+        body = json.dumps(self.records if page == 0 else []).encode()
+        self.send_response(200)
+        self.send_header("Content-Type", "application/json")
+        self.send_header("Content-Length", str(len(body)))
+        self.end_headers()
+        self.wfile.write(body)
+
+
+@pytest.fixture()
+def fixed_feed_server():
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _FixedFeedHandler)
+    t = threading.Thread(target=server.serve_forever, daemon=True)
+    t.start()
+    yield f"http://127.0.0.1:{server.server_address[1]}"
+    server.shutdown()
+
+
+def test_rest_pages_arrow_timestamps_and_amounts(spark, fixed_feed_server, monkeypatch):
+    """Arrow batches carry _parse_ts values as UTC instants, whatever the
+    worker's zone, and amounts as raw strings with NULL kept NULL."""
+    import datetime as dt
+
+    from pyspark.sql import functions as F
+
+    from zylyty_data_engineer_challenge_spark.etl.clean import coerce_amount
+    from zylyty_data_engineer_challenge_spark.sources.rest_pages import _batch_of
+
+    stamps = ["2024-05-01T10:00:00Z", "2024-05-01T12:00:00+02:00", 1714557600,
+              1714557600.5, "2024-05-01 10:00:00.250000", "not a date", None]
+    amounts = ["1.50", None, "garbage", "3", "4", "5", "6"]
+    records = [
+        {"transaction_id": i, "timestamp": ts, "account_id": 1, "amount": amt,
+         "type": "dep", "medium": "card"}
+        for i, (ts, amt) in enumerate(zip(stamps, amounts))
+    ]
+    want_us = [
+        None if _parse_ts(ts) is None
+        else round(_parse_ts(ts).replace(tzinfo=dt.timezone.utc).timestamp() * 1_000_000)
+        for ts in stamps
+    ]
+    # _batch_of in a zone far from UTC: naive values must not shift
+    monkeypatch.setenv("TZ", "Asia/Tokyo")
+    time.tzset()
+    try:
+        batch = _batch_of(0, 100, records)
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert batch.column("timestamp").cast("int64").to_pylist() == want_us
+
+    # end to end through Spark
+    _FixedFeedHandler.records = records
+    df = read_transactions(spark, fixed_feed_server, TOKEN, limit=100, max_pages=3)
+    got = {
+        r.transaction_id: r
+        for r in df.select("*", F.unix_micros("timestamp").alias("us")).collect()
+    }
+    assert [got[i].us for i in range(len(stamps))] == want_us
+    assert got[1].amount is None
+    assert got[2].amount == "garbage"
+    coerced = {r.transaction_id: r.amount for r in coerce_amount(df).collect()}
+    assert (coerced[1], coerced[2]) == (Decimal("0.00"), Decimal("0.00"))
+
+
+def test_rest_pages_rejected_token_fails_fast(spark, api_server):
+    # warm the Python planner first, so only the failing read is timed
+    read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=0).count()
+    _ApiHandler.page_log.clear()
+    df = read_transactions(spark, api_server, "wrong-token", limit=PAGE_LIMIT, max_pages=10)
+    start = time.time()
+    with pytest.raises(Exception, match="HTTP 401"):
+        df.count()
+    assert time.time() - start < RETRY_SLEEP
+    rejected = [p for tok, p, _ in _ApiHandler.page_log if tok == "wrong-token"]
+    assert len(rejected) == len(set(rejected))  # no page was retried
 
 
 # ---------------------------------------------------------------------------
@@ -172,7 +329,7 @@ def test_jdbc_roundtrip_and_view_ddl(spark, api_server, derby_url):
 
     accounts = fetch_csv(spark, api_server, "accounts", TOKEN, ACCOUNTS)
     tx = clean_transactions(
-        read_transactions_fallback(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
+        read_transactions(spark, api_server, TOKEN, limit=PAGE_LIMIT, max_pages=10)
     )
     written = jdbc_sink.insert_data_to_tables(
         {"accounts": accounts, "transactions": tx,
@@ -219,7 +376,6 @@ def test_run_pipeline_completion_line(spark, api_server, derby_url, capsys):
         admin_api_key=TOKEN,
         jdbc_url=f"{derby_url.replace('testdb', 'pipedb')}",
         push_views=False,  # reference DDL is PG-dialect; Derby can't run it
-        use_datasource=True,
     )
     written = run_pipeline(spark, cfg)
     out = capsys.readouterr().out
@@ -303,7 +459,6 @@ def test_pipeline_registers_engine_native_views(spark, api_server, derby_url):
         admin_api_key=TOKEN,
         jdbc_url=derby_url.replace("testdb", "viewdb"),
         push_views=False,
-        use_datasource=False,
     )
     run_pipeline(spark, cfg)
     v2 = spark.sql(

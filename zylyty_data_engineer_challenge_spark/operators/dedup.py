@@ -1599,7 +1599,7 @@ def _semantic_dropped(members: DataFrame, cap: int = SEM_CLUSTER_CAP) -> DataFra
     Arrow-batched numpy matmul per bounded block-pair task."""
     import pandas as pd
 
-    def drop_in_block(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def drop_in_block(key: tuple[int, int, int], pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         _, bi, bj = key

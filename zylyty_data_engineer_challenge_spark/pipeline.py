@@ -13,8 +13,10 @@ reference's exact external contract:
   unlike the reference (main.py:32-38), secrets are never printed.
 
 Differences by design: cleaning runs distributed (window dedup, not pandas
-row order); the REST ingest is a partitioned Python Data Source; JDBC
-writes are executor-parallel appends.
+row order); the REST ingest is a Python Data Source with one page range
+per task slot that yields Arrow batches (there is no serial driver-side
+reader); the CSVs reach Spark as Arrow tables; JDBC writes are
+executor-parallel appends.
 """
 
 from __future__ import annotations
@@ -28,7 +30,7 @@ from .etl.clean import clean_transactions
 from .schemas import ACCOUNTS, CLIENTS
 from .sinks import jdbc as jdbc_sink
 from .sources.http_csv import fetch_csv
-from .sources.rest_pages import read_transactions, read_transactions_fallback
+from .sources.rest_pages import read_transactions
 
 COMPLETION_FMT = "ZYLYTY Data Import Completed [{clients}, {accounts}, {transactions}]"
 
@@ -46,7 +48,6 @@ class PipelineConfig:
     db_name: str = field(default_factory=lambda: os.environ.get("DB_NAME", ""))
     jdbc_url: str | None = None  # overrides db_* when set (tests, non-PG targets)
     push_views: bool = True
-    use_datasource: bool = True  # partitioned REST source vs driver loop
 
     def url(self) -> str:
         if self.jdbc_url:
@@ -66,13 +67,13 @@ class PipelineConfig:
 def ingest(spark: SparkSession, cfg: PipelineConfig) -> dict[str, DataFrame]:
     """E1 steps 1-2: fetch the three datasets; transactions get cleaned
     (T2-T4). Ingest failures surface as empty frames, not exceptions —
-    except a hard page failure after bounded retries, which (like the
-    reference's non-RequestException path, SURVEY.md §8.4) propagates."""
+    except a hard page failure (bounded retries exhausted, or the token
+    rejected with 401/403), which (like the reference's non-RequestException
+    path, SURVEY.md §8.4) propagates."""
     accounts = fetch_csv(spark, cfg.api_base_url, "accounts", cfg.admin_api_key, ACCOUNTS)
     clients = fetch_csv(spark, cfg.api_base_url, "clients", cfg.admin_api_key, CLIENTS)
-    reader = read_transactions if cfg.use_datasource else read_transactions_fallback
     transactions = clean_transactions(
-        reader(spark, cfg.api_base_url, cfg.admin_api_key)
+        read_transactions(spark, cfg.api_base_url, cfg.admin_api_key)
     )
     return {"accounts": accounts, "clients": clients, "transactions": transactions}
 

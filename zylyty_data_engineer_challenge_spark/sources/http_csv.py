@@ -8,8 +8,9 @@ Reference semantics preserved exactly:
   — the pipeline loads what it can (main.py:71-73, SURVEY.md §8.4).
 
 Spark-first shape: the body (already driver-resident — it came over one
-HTTP response) is CSV-parsed driver-side and becomes a typed DataFrame via
-``createDataFrame`` + JVM-side casts to the declared schema. No temp files:
+HTTP response) is CSV-parsed driver-side into a ``pyarrow.Table`` of string
+columns, which ``createDataFrame`` hands to the JVM as is (no Python-RDD
+job); JVM-side casts then apply the declared schema. No spool files:
 a driver-local spool path would break on a real cluster (executors cannot
 read the driver's /tmp). Feeds too large for one driver-held response
 belong in object storage + ``spark.read.csv`` — that is a different
@@ -22,20 +23,13 @@ from __future__ import annotations
 import csv
 import io
 
+import pyarrow as pa
+import requests
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-try:
-    import requests
-except ImportError:  # pragma: no cover - requests is stdlib-adjacent here
-    requests = None
-
 DEFAULT_TIMEOUT = 10.0  # main.py:66
-
-
-def _empty(spark: SparkSession, schema: T.StructType) -> DataFrame:
-    return spark.createDataFrame([], schema)
 
 
 def fetch_csv(
@@ -51,8 +45,6 @@ def fetch_csv(
     Returns an empty DataFrame (with the right schema) on any failure,
     mirroring the reference's silent-failure ethos (main.py:71-73).
     """
-    if requests is None:
-        return _empty(spark, schema)
     try:
         resp = requests.get(
             f"{base_url}/download/{name}.csv",
@@ -60,19 +52,14 @@ def fetch_csv(
             timeout=timeout,
         )
         resp.raise_for_status()
-        body = resp.content
+        records = list(csv.DictReader(io.StringIO(resp.content.decode("utf-8"))))
     except Exception:
-        return _empty(spark, schema)
-
-    try:
-        reader = csv.DictReader(io.StringIO(body.decode("utf-8")))
-        names = [f.name for f in schema.fields]
-        raw_schema = T.StructType([T.StructField(n, T.StringType(), True) for n in names])
-        rows = [tuple(rec.get(n) for n in names) for rec in reader]
-        raw = spark.createDataFrame(rows, raw_schema)
-        # JVM-side casts to the declared types (PERMISSIVE: bad cells -> NULL)
-        return raw.select(
-            *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-        )
-    except Exception:
-        return _empty(spark, schema)
+        records = []
+    # string columns by header name (absent -> NULL), then JVM-side casts
+    # to the declared types (PERMISSIVE: bad cells -> NULL)
+    table = pa.table(
+        {f.name: pa.array([r.get(f.name) for r in records], pa.string()) for f in schema}
+    )
+    return spark.createDataFrame(table).select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema]
+    )

@@ -10,15 +10,18 @@ Reference semantics:
 * on request failure the reference sleeps 2 s and retries the same page
   *forever* (main.py:113-116) — an availability bug; here the retry is
   BOUNDED (``max_retries`` per page, then the page is surfaced as an error)
-  per SURVEY.md §2.1's recommendation.
+  per SURVEY.md §2.1's recommendation. A 401/403 is not retried at all: a
+  rejected token does not heal, so the task fails at once.
 
 Spark-first shape: a **PySpark Python Data Source** (Spark 4.x,
-``pyspark.sql.datasource``) whose ``partitions()`` enumerates page ranges —
-so a 1000-executor cluster fetches pages in parallel and the rows never
-pass through the driver. Each row carries ``_arrival = page*limit + idx``,
-the stable cross-partition arrival ordinal that keep-first dedup (T3)
-needs (SURVEY.md §7 risk 1). A serial driver-side fallback with identical
-semantics covers environments without the data source API.
+``pyspark.sql.datasource``) whose ``partitions()`` splits the pages into
+one contiguous range per task slot (``min(pages, defaultParallelism)``),
+so the pages are fetched in parallel and the rows never pass through the
+driver. Each task reuses one HTTP session for its range and yields one
+Arrow ``RecordBatch`` per page, which Spark takes as is instead of
+re-validating tuples value by value. Each row carries
+``_arrival = page*limit + idx``, the stable cross-partition arrival ordinal
+that keep-first dedup (T3) needs (SURVEY.md §7 risk 1).
 """
 
 from __future__ import annotations
@@ -27,18 +30,10 @@ import datetime as dt
 import time
 from collections.abc import Iterator, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-
-try:  # the Python Data Source API is Spark >= 4.0; the serial fallback
-    # below works everywhere, so the import must not be load-bearing
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    HAS_DATASOURCE_API = True
-except ImportError:  # pragma: no cover - current env ships Spark 4.x
-    HAS_DATASOURCE_API = False
-    DataSource = object  # type: ignore[assignment,misc]
-    DataSourceReader = object  # type: ignore[assignment,misc]
-    InputPartition = object  # type: ignore[assignment,misc]
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..schemas import TRANSACTIONS_RAW
 
@@ -47,7 +42,10 @@ DEFAULT_MAX_PAGES = 300  # main.py:96 (inclusive bound => 301 pages)
 DEFAULT_TIMEOUT = 10.0  # main.py:104
 RETRY_SLEEP = 2.0  # main.py:115
 DEFAULT_MAX_RETRIES = 5  # bounded, unlike the reference
-PAGES_PER_PARTITION = 8
+
+# timestamp[us, tz=UTC]: _parse_ts yields UTC-naive values, which Arrow
+# reads as UTC whatever the worker's local zone is
+ARROW_SCHEMA = to_arrow_schema(TRANSACTIONS_RAW)
 
 
 def _parse_ts(v) -> dt.datetime | None:
@@ -76,16 +74,18 @@ def _unwrap(payload) -> list[dict]:
 
 
 def _fetch_page(
-    base_url: str, token: str, page: int, limit: int, timeout: float, max_retries: int
+    base_url: str, token: str, page: int, limit: int, timeout: float, max_retries: int,
+    session=None,
 ) -> list[dict]:
     """One page with bounded same-page retry (2 s backoff, like the
-    reference but finite). Raises after ``max_retries`` failures."""
+    reference but finite) over ``session`` (a ``requests.Session``) if
+    given. Raises after ``max_retries`` failures, and at once on 401/403."""
     import requests
 
     last_err: Exception | None = None
-    for _ in range(max_retries + 1):
+    for attempt in range(max_retries + 1):
         try:
-            resp = requests.get(
+            resp = (session or requests).get(
                 f"{base_url}/transactions",
                 params={"page": page, "limit": limit},
                 headers={"Authorization": f"Bearer {token}"},
@@ -95,31 +95,47 @@ def _fetch_page(
                 resp.status_code == 400 and page > 0
             ):
                 # past-the-end page on APIs that error instead of returning
-                # an empty list — later partitions probe beyond the feed,
-                # so this is end-of-data, not a failure. A 400 on page 0 is
-                # a genuinely bad request (malformed params/auth scheme) and
-                # must surface, not silently yield an empty dataset
-                # (ADVICE r1) — fall through to raise_for_status.
+                # an empty list: end-of-data. A 400 on page 0 is a bad
+                # request and must surface, not yield an empty dataset.
                 return []
             resp.raise_for_status()
             return _unwrap(resp.json())
-        except Exception as e:  # requests.RequestException + JSON errors
+        except Exception as e:  # 5xx, timeouts, connection and JSON errors
+            if isinstance(e, requests.HTTPError) and e.response.status_code in (401, 403):
+                # a rejected token does not heal: no sleep, no retry
+                raise RuntimeError(f"page {page} failed: HTTP {e.response.status_code}") from e
             last_err = e
-            time.sleep(RETRY_SLEEP)
+            if attempt < max_retries:
+                time.sleep(RETRY_SLEEP)
     raise RuntimeError(f"page {page} failed after {max_retries} retries") from last_err
 
 
-def _rows_of(page: int, limit: int, records: Sequence[dict]) -> Iterator[tuple]:
-    for idx, rec in enumerate(records):
-        yield (
-            int(rec["transaction_id"]) if rec.get("transaction_id") is not None else None,
-            _parse_ts(rec.get("timestamp")),
-            int(rec["account_id"]) if rec.get("account_id") is not None else None,
-            None if rec.get("amount") is None else str(rec.get("amount")),
-            rec.get("type"),
-            rec.get("medium"),
-            page * limit + idx,  # _arrival ordinal
-        )
+def _batch_of(page: int, limit: int, records: Sequence[dict]) -> pa.RecordBatch:
+    """One page as an Arrow batch in the TRANSACTIONS_RAW layout: ids
+    through ``int()``, amounts through ``str()`` (NULL stays NULL), text
+    as Spark's StringType converter renders it."""
+
+    def ints(key: str) -> list[int | None]:
+        return [None if r.get(key) is None else int(r[key]) for r in records]
+
+    def texts(key: str) -> list[str | None]:
+        vals = (r.get(key) for r in records)  # bools become "true"/"false"
+        return [None if v is None else str(v).lower() if isinstance(v, bool) else str(v)
+                for v in vals]
+
+    first = page * limit
+    return pa.record_batch(
+        [
+            ints("transaction_id"),
+            [_parse_ts(r.get("timestamp")) for r in records],
+            ints("account_id"),
+            [None if r.get("amount") is None else str(r.get("amount")) for r in records],
+            texts("type"),
+            texts("medium"),
+            range(first, first + len(records)),  # _arrival ordinal
+        ],
+        schema=ARROW_SCHEMA,
+    )
 
 
 class PageRange(InputPartition):
@@ -136,26 +152,30 @@ class RestPagesReader(DataSourceReader):
         self.max_pages = int(options.get("max_pages", DEFAULT_MAX_PAGES))
         self.timeout = float(options.get("timeout", DEFAULT_TIMEOUT))
         self.max_retries = int(options.get("max_retries", DEFAULT_MAX_RETRIES))
-        self.pages_per_partition = int(
-            options.get("pages_per_partition", PAGES_PER_PARTITION)
-        )
+        self.num_partitions = int(options.get("partitions", 1))
 
     def partitions(self) -> list[PageRange]:
+        """``partitions`` contiguous ranges whose sizes differ by at most
+        one page."""
         total = self.max_pages + 1  # inclusive bound, main.py:101
-        step = self.pages_per_partition
-        return [PageRange(s, min(s + step, total)) for s in range(0, total, step)]
+        n = max(1, min(self.num_partitions, total))
+        return [PageRange(i * total // n, (i + 1) * total // n) for i in range(n)]
 
-    def read(self, partition: PageRange) -> Iterator[tuple]:
-        """Executor-side: fetch this partition's pages serially; a short
-        page (< limit rows) ends the feed, so later pages in this range —
-        and implicitly later partitions — yield nothing extra."""
-        for page in range(partition.start, partition.end):
-            records = _fetch_page(
-                self.base_url, self.token, page, self.limit, self.timeout, self.max_retries
-            )
-            yield from _rows_of(page, self.limit, records)
-            if len(records) < self.limit:  # main.py:111-112
-                break
+    def read(self, partition: PageRange) -> Iterator[pa.RecordBatch]:
+        """Executor-side: fetch this partition's pages serially over one
+        session; a short page (< limit rows) ends the feed, so later pages
+        in this range are not requested and each later range costs one
+        past-the-end request."""
+        import requests
+
+        with requests.Session() as http:
+            for page in range(partition.start, partition.end):
+                records = _fetch_page(self.base_url, self.token, page, self.limit,
+                                      self.timeout, self.max_retries, http)
+                if records:
+                    yield _batch_of(page, self.limit, records)
+                if len(records) < self.limit:  # main.py:111-112
+                    break
 
 
 class RestPagesDataSource(DataSource):
@@ -182,9 +202,9 @@ def read_transactions(
     token: str,
     limit: int = DEFAULT_LIMIT,
     max_pages: int = DEFAULT_MAX_PAGES,
-    pages_per_partition: int = PAGES_PER_PARTITION,
 ) -> DataFrame:
-    """Partitioned read through the Python Data Source."""
+    """Partitioned read through the Python Data Source, one page range
+    per task slot."""
     register(spark)
     return (
         spark.read.format("rest_pages")
@@ -192,27 +212,6 @@ def read_transactions(
         .option("token", token)
         .option("limit", limit)
         .option("max_pages", max_pages)
-        .option("pages_per_partition", pages_per_partition)
+        .option("partitions", min(max_pages + 1, spark.sparkContext.defaultParallelism))
         .load()
     )
-
-
-def read_transactions_fallback(
-    spark: SparkSession,
-    base_url: str,
-    token: str,
-    limit: int = DEFAULT_LIMIT,
-    max_pages: int = DEFAULT_MAX_PAGES,
-    timeout: float = DEFAULT_TIMEOUT,
-    max_retries: int = DEFAULT_MAX_RETRIES,
-) -> DataFrame:
-    """Serial driver-side loop (the reference's own shape, main.py:101-116)
-    for environments without the Python Data Source API. Collects all rows
-    then creates ONE DataFrame — no O(pages²) concat (SURVEY.md §2.2)."""
-    rows: list[tuple] = []
-    for page in range(0, max_pages + 1):
-        records = _fetch_page(base_url, token, page, limit, timeout, max_retries)
-        rows.extend(_rows_of(page, limit, records))
-        if len(records) < limit:
-            break
-    return spark.createDataFrame(rows, TRANSACTIONS_RAW)
